@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType,
   LongType, TimestampNTZType, TimestampType}
 
+import graft.queries.Memo
+
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All queries read via this single entry so that source options (and, at
@@ -18,53 +20,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Loader memo, round-17 optimization (guide §6 "file listing"): every
-    * `spark.read.parquet` call pays a driver-side file listing + footer
-    * schema read + InMemoryFileIndex build — measured 0.1-0.45 s of pure
-    * DataFrame-CONSTRUCTION time per query at sf0.1 (PhaseProfile), since
-    * most queries load 1-6 tables and some (dq_audit) load six. The
-    * LOGICAL PLAN of a base table is identical across every query in a
-    * session, so build it once per (session, dir, table) and let each
-    * query graft its own transforms on top. This caches *metadata only*
-    * (the relation + its file index — the same thing
+  /** One base table as a memoized PLAN entry (round-17 optimization,
+    * guide §6 "file listing"): every `spark.read.parquet` call pays a
+    * driver-side file listing + footer schema read + InMemoryFileIndex
+    * build, measured 0.1-0.45 s of pure DataFrame-construction time per
+    * query at sf0.1 (PhaseProfile), and some queries (dq_audit) load six
+    * tables. The logical plan of a base table is identical across every
+    * query in a session, so it is built once per (session, dir, table) and
+    * each query grafts its own transforms on top. This caches metadata
+    * only (the relation and its file index, the same thing
     * `spark.sql.hive.filesourcePartitionFileCacheSize` caches for catalog
-    * tables); no row data is persisted, every query still scans parquet.
-    * At 100 TB the listing is minutes of driver time per query without
-    * this. Entries evict when the owning SparkContext ends (same
-    * lifecycle as the queries' Memo tables). Staleness: a caller that
-    * rewrites a table in-place mid-session would read the old file list —
-    * the engine's corpora are immutable per directory (generators write
-    * fresh dirs), same contract as the queries' disk-cached artifacts.
+    * tables); every query still scans parquet. At 100 TB the listing is
+    * minutes of driver time per query without this. Staleness: a caller
+    * that rewrites a table in place mid-session would read the old file
+    * list; the engine's corpora are immutable per directory (generators
+    * write fresh dirs), the same contract as the disk-cached artifacts.
     */
-  private val tableMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-
-  /** Contexts that already carry an eviction listener — round-18 advice
-    * fix: one listener per SparkContext (clearing every key whose session
-    * belongs to the ending context, cloned sessions included) instead of
-    * one listener per memo entry, which accumulated on a long-lived
-    * multi-session context.
-    */
-  private val evictRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    tableMemo.getOrElseUpdate((spark, key, ""), {
-      val sc = spark.sparkContext
-      if (evictRegistered.add(sc))
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            tableMemo.keys.toSeq.filter(_._1.sparkContext eq sc)
-              .foreach(k => tableMemo.remove(k): Unit)
-            evictRegistered.remove(sc): Unit
-          }
-        })
-      build
-    })
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memoized(spark, s"$dir/$name") {
+    Memo.plan(spark, dir, s"table_$name") { () =>
       val df = spark.read.parquet(s"$dir/$name.parquet")
       name match {
         case "events" => normalizeEventTs(spark, df)
@@ -216,11 +189,11 @@ object Tables {
     * is also once per (session, dir).
     */
   def docs(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"$dir#docs-spread")(
+    Memo.plan(spark, dir, "docs_spread")(() =>
       spread(spark, apply(spark, dir, "documents"), "doc_id"))
 
   /** `embeddings`, conditionally spread like [[docs]]. */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"$dir#emb-spread")(
+    Memo.plan(spark, dir, "embeddings_spread")(() =>
       spread(spark, apply(spark, dir, "embeddings"), "vec_id"))
 }

@@ -138,16 +138,13 @@ object MultimodalQueries {
   val MediaTau = 0.3
   val FpDfCap = 1024
 
-  private val mediaFpsMemo = Memo.table()
-
   def mediaNeardup(spark: SparkSession, dir: String): DataFrame = {
     val fb = graft.operators.MediaDecode.FrameBytes
-    // Disk-cached index artifact (see [[Memo.memoizeDisk]]): the CDC
+    // Disk-cached index artifact (see [[Memo.disk]]): the CDC
     // chunk-fingerprint table is the media dedup's build-once index; a
     // cold JVM scans the content-keyed parquet instead of re-hexing and
     // re-hashing every payload.
-    val fps = Memo.memoizeDisk(mediaFpsMemo, spark, dir, "media_fps",
-      s"fb=$fb") {
+    val fps = Memo.disk(spark, dir, "media_fps", s"fb=$fb") { () =>
       val base = Tables.docs(spark, dir)
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .filter(octet_length(col("payload")) > 0)

@@ -13,104 +13,71 @@ case class QueryDef(
     sql: Option[String],
     doc: String = "")
 
-/** Session-scoped memoize-and-persist for per-(session, dir) derived
-  * tables (shingle tables, signature tables, embedding norms): queries
-  * reference these subplans several times and repeated invocations (the
-  * bench loop, the verify dump) share one cache entry instead of leaking a
-  * new one per call. When the owning SparkContext ends the entry is
-  * evicted, so the map never retains stopped sessions (or their cached
-  * blocks) for the JVM lifetime — a slow leak in a long-running
-  * multi-tenant driver otherwise. One listener per entry; eviction is
-  * idempotent.
+/** The one artifact registry: every per-(session, dir) value the queries
+  * and the table loaders reuse lives in ONE map keyed by (SparkSession,
+  * dir, label). Repeated invocations (the bench loop, the verify dump)
+  * share one entry instead of rebuilding or leaking one per call. Each
+  * entry has an explicit kind:
+  *
+  *  - [[plan]]: an analyzed DataFrame plan, never persisted. Every action
+  *    re-executes from the parquet inputs; what repeats share is the plan
+  *    object. Construction cost is paid once, and because the stored
+  *    plan's expression ids are fixed, re-executions generate
+  *    byte-identical codegen text and hit the generated-class cache
+  *    instead of recompiling.
+  *  - [[persisted]]: a DataFrame persisted on first build, for subplans a
+  *    query references several times.
+  *  - [[value]]: a driver-side planning value (split points, row counts,
+  *    routing decisions) pulled once and embedded in plans as a literal.
+  *  - [[disk]]: a persisted read of a content-keyed parquet artifact that
+  *    survives the process (see [[disk]]).
+  *
+  * Labels are global across the engine, suffixed where one call site
+  * varies a parameter (a recall regime, a list count). Each entry records
+  * its kind and the class of its build thunk, which is one class per call
+  * site, so two call sites sharing a key fail loudly instead of one
+  * silently reading the other's artifact.
+  *
+  * Eviction: ONE listener per SparkContext clears every key of the ending
+  * context, cloned sessions' included (their cached blocks die with the
+  * shared context anyway), so the map never retains stopped sessions for
+  * the JVM lifetime. A context that has already stopped gets no entry:
+  * the build runs and its result is returned uncached.
   */
-private[queries] object Memo {
-  type Table = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
-  def table(): Table = new Table
+private[graft] object Memo {
+  private final case class Entry(kind: String, site: Class[_], value: Any)
 
-  def memoize(memo: Table, spark: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
-      build.persist()
-    })
+  private val entries =
+    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), Entry]
 
-  /** Memoize a DataFrame PLAN per (session, dir) — like [[memoize]] but
-    * WITHOUT `.persist()`: no row data is ever cached; every action on
-    * the returned DataFrame re-executes the full plan from the parquet
-    * inputs. What repeats share is the ANALYZED LOGICAL PLAN object —
-    * construction cost (sub-plan assembly, memoized-literal pulls) is
-    * paid once, and because the stored plan's expression ids are fixed,
-    * re-executions generate byte-identical codegen text and hit the
-    * generated-class cache instead of recompiling (round-17: the recall
-    * report rebuilt ten search plans per invocation — 1.4 s of driver
-    * construction and 158 janino recompiles per WARM run).
-    */
-  def memoizePlan(memo: Table, spark: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
-      build
-    })
+  /** Contexts that already carry the eviction listener. */
+  private val listening =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
 
-  /** Memoize a driver-side PLANNING value (split-point bounds, row
-    * counts) per (session, dir) — same lifecycle as [[memoize]] but for
-    * plain values that are pulled to the driver once and embedded in
-    * plans as literals, so repeated plan constructions (the bench loop's
-    * warm repeats) don't re-run the sampling job each time.
-    */
-  def memoizeValue[A](
-      memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      spark: SparkSession, dir: String)(build: => A): A =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
-      build
-    })
+  def plan(spark: SparkSession, dir: String, label: String)(
+      build: () => DataFrame): DataFrame =
+    entry(spark, dir, label, "plan", build)(build())
 
-  /** (memo, context) pairs that already carry an eviction listener —
-    * round-18 advice fix: the round-17 form registered ONE LISTENER PER
-    * ENTRY, so sessions created via newSession()/cloneSession() on a
-    * long-lived context accumulated listeners (and their closures) until
-    * the context ended. One listener per (memo, context) now clears every
-    * key belonging to the ending context — including cloned sessions',
-    * whose cached blocks die with the shared context anyway.
-    */
-  private val evictRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(AnyRef, org.apache.spark.SparkContext)]()
+  def persisted(spark: SparkSession, dir: String, label: String)(
+      build: () => DataFrame): DataFrame =
+    entry(spark, dir, label, "persisted", build)(build().persist())
 
-  private def evictOnEnd[A](
-      memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (evictRegistered.add((memo, sc)))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          memo.keys.toSeq.filter(_._1.sparkContext eq sc)
-            .foreach(k => memo.remove(k): Unit)
-          evictRegistered.remove((memo, sc)): Unit
-        }
-      })
-  }
+  def value[A](spark: SparkSession, dir: String, label: String)(build: () => A): A =
+    entry(spark, dir, label, "value", build)(build())
 
-  /** Bump when the SEMANTICS of any disk-cached artifact change (algorithm
-    * edits that don't move a tunable constant): stale cache entries under
-    * the old epoch stop matching and rebuild.
-    */
-  private val CacheEpoch = "e1"
-
-  /** Disk-backed memoize — the production BUILD-vs-PROBE separation for
+  /** Disk-backed entry: the production BUILD-vs-PROBE separation for
     * expensive index artifacts (minhash pair graphs, cluster labels,
-    * codebooks, PQ codes): the first build in ANY process writes the
-    * artifact as a content-keyed parquet table; every later process —
-    * including a cold JVM — reads the table instead of rebuilding. This is
-    * exactly how a 100 TB deployment runs (indexes are built once by a
-    * build job and probed by every query job after), and it converts the
-    * cold-start cost of the query path from O(index build) to O(scan of
-    * the built index).
+    * codebooks, PQ codes). The first build in ANY process writes the
+    * artifact as a content-keyed parquet table; every later process,
+    * including a cold JVM, reads the table instead of rebuilding. This is
+    * how a 100 TB deployment runs (indexes are built once by a build job
+    * and probed by every query job after), and it turns the cold-start
+    * cost of the query path from O(index build) into O(scan of the built
+    * index).
     *
     * The content key covers: the artifact label, [[CacheEpoch]], the
     * caller's `configKey` (every tunable constant the artifact's content
-    * depends on — a retune invalidates exactly the affected artifacts),
+    * depends on, so a retune invalidates exactly the affected artifacts),
     * and a byte-level footprint of the input directory (path, size,
     * nanosecond-resolution mtime of every file), so regenerated testdata
     * is detected whenever the filesystem records sub-second mtimes (every
@@ -118,26 +85,75 @@ private[queries] object Memo {
     * mtime tick of a coarser filesystem is the one undetectable case.
     * Correctness is unaffected: artifact builds are deterministic
     * (oracle-pinned), so the parquet round-trip returns bit-identical
-    * rows.
+    * rows. The registry key carries `label|configKey`, so a call site that
+    * varies a keyed constant (ivfAssigned's list count) gets one entry per
+    * value.
     *
-    * Concurrency: builders write to a process-unique temp dir and
-    * atomically rename into place; a lost race reads the winner's table.
+    * `label` must be in [[DiskLabels]]. Concurrency: builders write to a
+    * process-unique temp dir and atomically rename into place, and a lost
+    * race reads the winner's table; within one process, builds of one
+    * label are serialized so two sessions never share that temp dir.
     * Cache root: SPARK_GRAFT_INDEX_CACHE (default /tmp/graft-index-cache);
-    * set it empty to disable disk caching (in-memory memo still applies).
+    * set it empty to disable disk caching (the in-memory entry still
+    * applies).
     */
-  /** `memoKey` extends the IN-MEMORY memo key beyond (session, dir) when
-    * one table legitimately varies by a build parameter the disk key
-    * already carries (e.g. ivfAssigned's list count `c`): without it a
-    * capacity sweep hitting an already-populated entry would silently get
-    * the first-built table back. The footprint/disk key still uses the
-    * real `dir` only.
+  def disk(spark: SparkSession, dir: String, label: String, configKey: String)(
+      build: () => DataFrame): DataFrame = {
+    val lock = diskLocks.getOrElse(label, throw new IllegalArgumentException(
+      s"'$label' is not a disk-cacheable artifact label (Memo.DiskLabels)"))
+    entry(spark, dir, s"$label|$configKey", "disk", build)(
+      lock.synchronized(diskCached(spark, dir, label, configKey)(build())).persist())
+  }
+
+  private def entry[A](spark: SparkSession, dir: String, label: String,
+      kind: String, build: AnyRef)(make: => A): A = {
+    val sc = spark.sparkContext
+    if (sc.isStopped) return make
+    if (listening.add(sc))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = evict(sc)
+      })
+    val e = entries.getOrElseUpdate((spark, dir, label), Entry(kind, build.getClass, make))
+    // the context may have ended (and been swept) while this entry built
+    if (sc.isStopped) evict(sc)
+    require(e.kind == kind && e.site == build.getClass,
+      s"memo label '$label' is claimed by two call sites " +
+        s"(${e.kind} ${e.site.getName} vs $kind ${build.getClass.getName})")
+    e.value.asInstanceOf[A]
+  }
+
+  private def evict(sc: org.apache.spark.SparkContext): Unit = {
+    entries.keys.filter(_._1.sparkContext eq sc).foreach(entries.remove(_): Unit)
+    listening.remove(sc): Unit
+  }
+
+  /** Labels the registry holds for sessions of `spark`'s context. */
+  private[graft] def labelsOf(spark: SparkSession): Seq[String] =
+    entries.keys.collect { case (s, _, l) if s.sparkContext eq spark.sparkContext => l }.toSeq
+
+  /** Bump when the SEMANTICS of any disk-cached artifact change (algorithm
+    * edits that don't move a tunable constant): stale cache entries under
+    * the old epoch stop matching and rebuild.
     */
-  def memoizeDisk(memo: Table, spark: SparkSession, dir: String, label: String,
-      configKey: String, memoKey: String = "")(build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir + memoKey), {
-      evictOnEnd(memo, spark)
-      diskCached(spark, dir, label, configKey)(build).persist()
-    })
+  private val CacheEpoch = "e1"
+
+  /** The artifacts allowed a disk entry: the index builds whose cold
+    * rebuild costs more than a parquet scan. Anything else stays
+    * in-memory; extending this set is a design decision, not a call-site
+    * detail.
+    */
+  private[graft] val DiskLabels: Set[String] = Set(
+    "shingle_hashes", "mh_pairs", "mh_cluster_labels", "shingle_inter",
+    "eval_bloom", "pagerank_scores", "mad_model", "basket_membership",
+    "exact_topk", "embed_cluster_labels",
+    "ivf_lists_sampled", "ivf_lists_kmeans", "ivf_lists_scaled", "ivf_lists_kmeans_scaled",
+    "ivf_probes_kmeans", "ivf_probes_kmeans_scaled", "km_codebook", "km_codebook_scaled",
+    "pq_codebook", "pq_codes", "rpq_codebook", "rpq_codebook_scaled",
+    "ivfpq_res_index", "ivfpq_res_index_scaled",
+    "media_fps", "term_freq", "source_term_freq", "bpe_merges")
+
+  private val diskLocks: Map[String, AnyRef] = DiskLabels.map(_ -> new AnyRef).toMap
 
   private def diskCached(spark: SparkSession, dir: String, label: String,
       configKey: String)(build: => DataFrame): DataFrame = {

@@ -1032,6 +1032,18 @@ object RelationalQueries {
       |             - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))""".stripMargin
 
   // ------------------------------------------------------- retention_cohorts
+  /** Distinct (user_id, day) activity grid — the shared spine of
+    * [[retentionCohorts]] and [[activeUsers]]: the partial-final hash
+    * distinct is the ONLY stage that sees raw events, and its output is
+    * bounded by |users|·|days| regardless of corpus size. Persisted so the
+    * two queries (and repeated bench invocations) build it once.
+    */
+  private def activityGrid(spark: SparkSession, dir: String): DataFrame =
+    Memo.persisted(spark, dir, "activity_grid")(() =>
+      Tables(spark, dir, "events")
+        .select(col("user_id"), expr("ts div 86400000000000").as("d"))
+        .distinct())
+
   /** `retention_cohorts` — cohort/retention analysis, the classic product-
     * analytics shape: users grouped by first-activity day (their cohort),
     * then for each (cohort_day, day_offset) the number of cohort members
@@ -1046,20 +1058,6 @@ object RelationalQueries {
     * is already distinct, and a user has exactly one cohort, so no
     * countDistinct pass is ever needed.
     */
-  private val gridMemo = Memo.table()
-
-  /** Distinct (user_id, day) activity grid — the shared spine of
-    * [[retentionCohorts]] and [[activeUsers]]: the partial-final hash
-    * distinct is the ONLY stage that sees raw events, and its output is
-    * bounded by |users|·|days| regardless of corpus size. Memoized so the
-    * two queries (and repeated bench invocations) build it once.
-    */
-  private def activityGrid(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(gridMemo, spark, dir)(
-      Tables(spark, dir, "events")
-        .select(col("user_id"), expr("ts div 86400000000000").as("d"))
-        .distinct())
-
   def retentionCohorts(spark: SparkSession, dir: String): DataFrame = {
     val act = activityGrid(spark, dir)
     val w = Window.partitionBy(col("user_id"))
@@ -1642,6 +1640,37 @@ object RelationalQueries {
        |FROM w GROUP BY event_type""".stripMargin
 
   // -------------------------------------------------------------- anomaly_mad
+  /** The per-type (med_cents, mad_cents) MODEL TABLE behind [[anomalyMad]]
+    * — memoized as a session index artifact so the batch flagger and the
+    * streaming scorer (`StreamingOps.anomalyStream`, the offline-model /
+    * online-inference pattern) share one build.
+    */
+  def madModel(spark: SparkSession, dir: String): DataFrame = {
+    val wOrd = Window.partitionBy(col("event_type"))
+      .orderBy(col("cents").asc, col("event_id").asc)
+    val wAll = Window.partitionBy(col("event_type"))
+    val wDev = Window.partitionBy(col("event_type"))
+      .orderBy(col("dev").asc, col("event_id").asc)
+    val e = Tables(spark, dir, "events")
+      .select(col("event_id"), col("event_type"),
+        round(col("value") * 100).cast("long").as("cents"))
+    val med = Memo.persisted(spark, dir, "mad_median")(() => e
+      .withColumn("rk", row_number().over(wOrd).cast("long"))
+      .withColumn("n", count(lit(1)).over(wAll))
+      .groupBy(col("event_type"))
+      .agg(max(when(col("rk") === expr("(n * 50 + 99) div 100"),
+        col("cents"))).as("med_cents")))
+    Memo.disk(spark, dir, "mad_model", "pct=hi-median")(() => e
+      .join(broadcast(med), Seq("event_type"))
+      .withColumn("dev", abs(col("cents") - col("med_cents")))
+      .withColumn("rk", row_number().over(wDev).cast("long"))
+      .withColumn("n", count(lit(1)).over(wAll))
+      .groupBy(col("event_type"))
+      .agg(max(col("med_cents")).as("med_cents"), // constant within the type
+        max(when(col("rk") === expr("(n * 50 + 99) div 100"),
+          col("dev"))).as("mad_cents")))
+  }
+
   /** `anomaly_mad` — ROBUST outlier detection by the median/MAD rule:
     * flag events whose value deviates from the per-type MEDIAN by more
     * than 3× the MEDIAN ABSOLUTE DEVIATION. The robust complement of
@@ -1667,40 +1696,6 @@ object RelationalQueries {
     * sketch path (approx_percentile of deviations) drops the sorts when
     * approximation is acceptable.
     */
-  private val madMedMemo = Memo.table()
-  private val madModelMemo = Memo.table()
-
-  /** The per-type (med_cents, mad_cents) MODEL TABLE behind [[anomalyMad]]
-    * — memoized as a session index artifact so the batch flagger and the
-    * streaming scorer (`StreamingOps.anomalyStream`, the offline-model /
-    * online-inference pattern) share one build.
-    */
-  def madModel(spark: SparkSession, dir: String): DataFrame = {
-    val wOrd = Window.partitionBy(col("event_type"))
-      .orderBy(col("cents").asc, col("event_id").asc)
-    val wAll = Window.partitionBy(col("event_type"))
-    val wDev = Window.partitionBy(col("event_type"))
-      .orderBy(col("dev").asc, col("event_id").asc)
-    val e = Tables(spark, dir, "events")
-      .select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val med = Memo.memoize(madMedMemo, spark, dir)(e
-      .withColumn("rk", row_number().over(wOrd).cast("long"))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .groupBy(col("event_type"))
-      .agg(max(when(col("rk") === expr("(n * 50 + 99) div 100"),
-        col("cents"))).as("med_cents")))
-    Memo.memoizeDisk(madModelMemo, spark, dir, "mad_model", "pct=hi-median")(e
-      .join(broadcast(med), Seq("event_type"))
-      .withColumn("dev", abs(col("cents") - col("med_cents")))
-      .withColumn("rk", row_number().over(wDev).cast("long"))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .groupBy(col("event_type"))
-      .agg(max(col("med_cents")).as("med_cents"), // constant within the type
-        max(when(col("rk") === expr("(n * 50 + 99) div 100"),
-          col("dev"))).as("mad_cents")))
-  }
-
   def anomalyMad(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"),
@@ -2412,7 +2407,7 @@ object RelationalQueries {
 
   /** The driver-side sampling job: runs a full scan + top-K, so callers
     * on the hot path must memoize the result per (session, dir) —
-    * [[globalRank]] does, via [[Memo.memoizeValue]] — rather than re-run
+    * [[globalRank]] does, as a [[Memo.value]] entry — rather than re-run
     * it on every plan construction.
     */
   private[graft] def sampledRangeBounds(ev: DataFrame,
@@ -2448,19 +2443,13 @@ object RelationalQueries {
   private[graft] def fixedWidthBuckets(ev: DataFrame): DataFrame =
     ev.withColumn("bkt", expr(s"vc div $RankBucketCents"))
 
-  /** Memo for globalRank's sampled split points — O(RankBuckets) longs of
-    * planning metadata (like the codebooks and parquet row counts): the
-    * sampling scan runs once per (session, dir), not once per plan
-    * construction.
-    */
-  private val rankBoundsMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Long]]
-
   def globalRank(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir, "events").select(
       col("event_id"),
       round(col("value") * 100).cast("long").as("vc"))
-    val bs = Memo.memoizeValue(rankBoundsMemo, spark, dir)(sampledRangeBounds(ev))
+    // O(RankBuckets) longs of planning metadata: the sampling scan runs
+    // once per (session, dir), not once per plan construction
+    val bs = Memo.value(spark, dir, "rank_bounds")(() => sampledRangeBounds(ev))
     rankByBucket(applyRangeBounds(ev, bs))
   }
 
@@ -2757,15 +2746,12 @@ object RelationalQueries {
     * join; the pair table is vocabulary-sized (≤ |types|²) and meets
     * only broadcast-joined support totals.
     */
-  private val basketMemo = Memo.table()
-
   def basketRules(spark: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400000000000L
     // memoized basket-membership table: referenced four times below (supp,
     // both pair sides, basket total) — one distinct-collapse corpus pass
     // per (session, dir) instead of four
-    val m = Memo.memoizeDisk(basketMemo, spark, dir, "basket_membership",
-      s"day=$dayNs")(
+    val m = Memo.disk(spark, dir, "basket_membership", s"day=$dayNs")(() =>
       Tables(spark, dir, "events")
         .select(col("user_id"), expr(s"ts div $dayNs").as("d"),
           col("event_type"))
@@ -3099,11 +3085,8 @@ object RelationalQueries {
     */
   val UserSkewRouteThreshold: Long = 8192L
 
-  private val tfSkewMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
   private[graft] def maxEventsPerUser(spark: SparkSession, dir: String): Long =
-    Memo.memoizeValue(tfSkewMemo, spark, dir) {
+    Memo.value(spark, dir, "max_events_per_user") { () =>
       Tables(spark, dir, "events")
         .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
         .agg(max(col("c")).as("m")).head().getLong(0)

@@ -20,16 +20,14 @@ import graft.functions.{TopKLongsAgg, VectorFns}
 object SimilarityQueries {
 
   /** Embeddings with precomputed double vector + norm (O(d) per row, once —
-    * not recomputed per pair). Memoized-and-persisted per (session, dir)
-    * (see [[Memo]]): every similarity query references this table 2-4×
+    * not recomputed per pair). Persisted per (session, dir) (see
+    * [[Memo]]): every similarity query references this table 2-4×
     * (query side, corpus side, centroid/assignment branches), and without
     * the cache each reference re-scanned the parquet and re-derived
     * vector + norm — the dominant repeated cost in ann_ivf's round-3 plan.
     */
-  private val embMemo = Memo.table()
-
   private def emb(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(embMemo, spark, dir)(
+    Memo.persisted(spark, dir, "emb_vectors")(() =>
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label"), VectorFns.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", VectorFns.norm(col("v"))))
@@ -124,25 +122,11 @@ object SimilarityQueries {
     * chunking exists to protect. Footer record counts are exact regardless
     * of encoding.
     */
-  /** Footer-count cache: at 100 TB the embeddings table is ~10⁵ files and
-    * a footer pass costs driver minutes — do it once per (session, dir),
-    * not per query construction.
-    */
-  private val rowsMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
   private def estimatedRows(spark: SparkSession, dir: String): Long =
-    rowsMemo.getOrElseUpdate((spark, dir), {
-      // Same application-end eviction as Memo.memoize: without it the map
-      // retains stopped SparkSession objects for the JVM lifetime — a slow
-      // leak in a long-running multi-tenant driver.
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          rowsMemo.remove((spark, dir))
-      })
-      countRows(spark, dir)
-    })
+    // a value entry: at 100 TB the embeddings table is ~10⁵ files and a
+    // footer pass costs driver minutes — once per (session, dir), not per
+    // query construction
+    Memo.value(spark, dir, "embedding_rows")(() => countRows(spark, dir))
 
   private def countRows(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -265,11 +249,8 @@ object SimilarityQueries {
     * chunk-count independent (the pmod classes partition the query set) —
     * tests that force the multi-chunk path call [[annTopk]] directly.
     */
-  private val exactTopkMemo = Memo.table()
-
   def annTopkCached(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(exactTopkMemo, spark, dir, "exact_topk",
-      s"mod=$QueryMod,k=$TopK")(annTopk(spark, dir))
+    Memo.disk(spark, dir, "exact_topk", s"mod=$QueryMod,k=$TopK")(() => annTopk(spark, dir))
 
   def annTopk(spark: SparkSession, dir: String,
       maxBroadcast: Long = MaxBroadcastQueries): DataFrame = {
@@ -352,23 +333,18 @@ object SimilarityQueries {
     }
   }
 
-  /** PLAN memo for the ten declared search DataFrames + the recall
-    * report (round-17, Memo.memoizePlan — no data cached, ever): each
-    * search assembles a deep plan from the memoized index artifacts, and
-    * the recall report assembles all ten. Re-building them per
-    * invocation cost 1.4 s of driver construction per report call and —
-    * because fresh construction means fresh expression ids — generated
-    * code that never text-matches the codegen cache (158 janino
-    * recompiles per WARM report run). One analyzed plan per (session,
-    * dir, search) fixes both; every action still executes from parquet.
+  /** The ten declared search DataFrames and the recall report are
+    * [[Memo.plan]] entries (round 17; no data cached, ever): each search
+    * assembles a deep plan from the memoized index artifacts, and the
+    * recall report assembles all ten. Re-building them per invocation
+    * cost 1.4 s of driver construction per report call and — because
+    * fresh construction means fresh expression ids — generated code that
+    * never text-matches the codegen cache (158 janino recompiles per WARM
+    * report run). One analyzed plan per (session, dir, search) fixes
+    * both; every action still executes from parquet.
     */
-  private val searchPlanMemo = Memo.table()
-  private def planMemo(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    Memo.memoizePlan(searchPlanMemo, spark, dir + "#" + name)(build)
-
   def annLsh(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_lsh")(annLshProbe(spark, dir, LshRadius, LshTables))
+    Memo.plan(spark, dir, "ann_lsh")(() => annLshProbe(spark, dir, LshRadius, LshTables))
 
   /** DEDUPED candidate-pair IDS of the (radius, tables)-parameterized
     * LSH search — the exact-scored candidate set [[annRecallReport]]
@@ -387,16 +363,12 @@ object SimilarityQueries {
     def build = lshCandidatesBuild(spark, dir, radius, tables)
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
+    // the DEFAULT setting is persisted for [[annRecallReport]]'s scan
+    // count; parameter sweeps (RECALL.md) bypass the registry
     if (radius == LshRadius && tables == LshTables)
-      Memo.memoize(lshCandMemo, spark, dir)(build)
+      Memo.persisted(spark, dir, "lsh_candidates")(() => build)
     else build
   }
-
-  /** Memo for the DEFAULT-setting deduped LSH candidate-pair ids —
-    * [[annRecallReport]]'s scan count, computed once per (session, dir).
-    * Parameter sweeps (RECALL.md) bypass the memo.
-    */
-  private val lshCandMemo = Memo.table()
 
   private def lshCandidatesBuild(spark: SparkSession, dir: String, radius: Int,
       tables: Int = 1): DataFrame = {
@@ -546,6 +518,11 @@ object SimilarityQueries {
        |    AND round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 4) >= $CosTau)""".stripMargin
 
   // ----------------------------------------------------- dedup_cluster_embed
+  private def embedClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Memo.disk(spark, dir, "embed_cluster_labels", s"CosTau=$CosTau SaltGrid=$SaltGrid")(() =>
+      DedupQueries.propagateMinLabels(
+        similarPairs(spark, dir).select(col("a_id"), col("b_id"))))
+
   /** `dedup_cluster_embed` — connected components over the EMBEDDING
     * near-dup pair graph: the clustering step [[DedupQueries.dedupCluster]]
     * runs for text near-dups, applied to the cosine pair graph. Pairwise
@@ -565,14 +542,6 @@ object SimilarityQueries {
     * O(log diameter) rounds (pointer jumping), one shuffle join + min-agg
     * + jump join per round.
     */
-  private val embedClusterMemo = Memo.table()
-
-  private def embedClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(embedClusterMemo, spark, dir, "embed_cluster_labels",
-      s"CosTau=$CosTau SaltGrid=$SaltGrid")(
-      DedupQueries.propagateMinLabels(
-        similarPairs(spark, dir).select(col("a_id"), col("b_id"))))
-
   def dedupClusterEmbed(spark: SparkSession, dir: String): DataFrame = {
     val labels = embedClusterLabels(spark, dir)
     val cluster = coalesce(col("lbl"), col("vec_id"))
@@ -664,45 +633,14 @@ object SimilarityQueries {
   private[graft] def strideOf(c: Int): Long =
     java.lang.Long.highestOneBit(c.toLong) * 2L
 
-  /** Memo for ann_recall_report's kmeans-IVF scanned-candidate count —
-    * one long of audit metadata shared by the report's three
-    * kmeans-list consumers (ivf_kmeans / ivfpq / ivfpq_rerank).
-    */
-  private val kmScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
-  /** Same, for the scaled Lloyd codebook's probe lists (shared by the
-    * three capacity-law consumers: kmeans_scaled / ivfpq_scaled /
-    * ivfpq_rerank_scaled).
-    */
-  private val kmScaledScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
-  /** Round-17 metadata memos: per-regime query counts and the remaining
-    * per-index scan counts (sampled-IVF, scaled-IVF, LSH) — each a 1-row
-    * deterministic aggregate over memoized artifacts, collected once per
-    * (session, dir, regime) and embedded in the recall report as a
-    * literal, exactly the [[kmScanCountMemo]] pattern.
-    */
-  private val nQueriesMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val ivfScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val ivfScaledScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val lshScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
-  /** Memo for the IVF codebook — the index-BUILD artifact of IVF search
-    * (build the coarse quantizer once, probe it for every query batch):
-    * IvfC rows, persisted per (session, dir) so the assignment and probe
+  /** The IVF codebook — the index-BUILD artifact of IVF search (build
+    * the coarse quantizer once, probe it for every query batch): IvfC
+    * rows, persisted per (session, dir) so the assignment and probe
     * branches (and repeated invocations) share one TakeOrdered+rank
     * computation instead of re-deriving the codebook per reference.
     */
-  private val codebookMemo = Memo.table()
-
   private def codebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(codebookMemo, spark, dir)(sampledCodebook(spark, dir, IvfC))
+    Memo.persisted(spark, dir, "ivf_codebook_sampled")(() => sampledCodebook(spark, dir, IvfC))
 
   /** Hash-sampled codebook of `c` centroids — the shared builder behind
     * the fixed-capacity [[codebook]] and the data-scaled
@@ -721,29 +659,28 @@ object SimilarityQueries {
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf")(
-      ivfSearch(spark, dir, codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled"))
+    Memo.plan(spark, dir, "ann_ivf")(() =>
+      ivfSearch(spark, dir, codebook(spark, dir), "ivf_lists_sampled"))
 
-  /** Memos for the assigned inverted LISTS, one per codebook variant —
-    * the other half of the IVF index-build artifact (the codebook memo is
-    * the quantizer; this is the corpus partitioned by it). A real IVF
-    * index stores exactly this table; recomputing the n·C assignment on
-    * every probe batch would make "index" a misnomer. Keyed (session,
-    * dir) like every memo; a codebook change invalidates with the session.
+  /** Config fingerprints for the disk-cached index artifacts: every
+    * tunable the artifact's CONTENT depends on, so a retune invalidates
+    * exactly the affected cache entries (Memo.disk). Probe-side
+    * constants (Nprobe, RerankR, QueryMod) are deliberately absent — they
+    * parameterize the search, not the index.
     */
-  private val ivfListsMemo = Memo.table()
-  private val kmListsMemo = Memo.table()
+  private def ivfConfigKey: String =
+    s"IvfC=$IvfC KmIters=$KmIters KmDim=$KmDim QScale=$QScale"
+  private def pqConfigKey: String =
+    s"PqM=$PqM PqK=$PqK PqIters=$PqIters KmDim=$KmDim QScale=$QScale"
 
-  /** The IVF search stage, shared by [[annIvf]] and [[annIvfKmeans]]:
-    * assignment of all corpus vectors to their nearest centroid (packed
-    * max_by hash aggregate), Nprobe probe lists per query, shuffle-hash
-    * probe join, exact top-k ranking. `cents` must be a (cidx, cv2, cn2)
-    * codebook with cidx DENSE in [1, IvfC].
-    */
-  /** Corpus → centroid assignment, memoized: the inverted LISTS half of
-    * the IVF index. max_by aggregation instead of a row_number window —
-    * partial aggregation collapses the n·C broadcast-join rows to n
-    * map-side, so only one row per vector crosses the exchange. The
+  /** Corpus → centroid assignment: the assigned inverted LISTS of one
+    * codebook variant, the other half of the IVF index-build artifact (the
+    * codebook is the quantizer; this is the corpus partitioned by it). A
+    * real IVF index stores exactly this table; recomputing the n·C
+    * assignment on every probe batch would make "index" a misnomer.
+    * max_by aggregation instead of a row_number window — partial
+    * aggregation collapses the n·C broadcast-join rows to n map-side, so
+    * only one row per vector crosses the exchange. The
     * (cos6 DESC, cidx ASC) order is packed into ONE long — cos6 is
     * exactly k/1e6 so round(cos6·1e6) recovers k, and cidx is DENSE in
     * [1, IvfC] so the tiebreak term fits below IvfStride regardless of
@@ -756,30 +693,17 @@ object SimilarityQueries {
     * through the cross join; the all-long buffer keeps a HashAggregate,
     * and (v, nrm) re-attach with one join against the persisted emb table
     * afterwards.
-    */
-  /** Config fingerprints for the disk-cached index artifacts: every
-    * tunable the artifact's CONTENT depends on, so a retune invalidates
-    * exactly the affected cache entries (Memo.memoizeDisk). Probe-side
-    * constants (Nprobe, RerankR, QueryMod) are deliberately absent — they
-    * parameterize the search, not the index.
-    */
-  private def ivfConfigKey: String =
-    s"IvfC=$IvfC KmIters=$KmIters KmDim=$KmDim QScale=$QScale"
-  private def pqConfigKey: String =
-    s"PqM=$PqM PqK=$PqK PqIters=$PqIters KmDim=$KmDim QScale=$QScale"
-
-  /** Each (listsMemo, diskLabel) pair is bound to one codebook variant,
-    * whose `c` is a pure function of (variant, dir) — IvfC for the fixed
-    * tables, [[scaledCOf]] (memoized per session+dir) for the scaled
-    * ones. The in-memory memo key carries `C=$c` like the disk key does,
-    * so a capacity sweep passing a different c against a populated table
-    * builds its own entry instead of silently reading the first-built
-    * lists back.
+    *
+    * Each `lists` label is bound to one codebook variant, whose `c` is a
+    * pure function of (variant, dir) — IvfC for the fixed tables,
+    * [[scaledCOf]] for the scaled ones. The registry key carries the
+    * config key and with it `C=$c`, so a capacity sweep passing a
+    * different c against a populated label builds its own entry instead
+    * of silently reading the first-built lists back.
     */
   private def ivfAssigned(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, c: Int = IvfC): DataFrame =
-    Memo.memoizeDisk(listsMemo, spark, dir, diskLabel, s"$ivfConfigKey C=$c",
-      memoKey = s"#C=$c") {
+      lists: String, c: Int = IvfC): DataFrame =
+    Memo.disk(spark, dir, lists, s"$ivfConfigKey C=$c") { () =>
       val e = emb(spark, dir)
       // stride derived from the ACTUAL list count, not the fixed constant:
       // the scaled codebook's C is data-derived and can exceed IvfC
@@ -796,19 +720,6 @@ object SimilarityQueries {
           col("v").as("cv"), col("nrm").as("cn"))
     }
 
-  /** Memo for the DEFAULT-depth kmeans probe lists — the query→list
-    * assignment table (O(n/QueryMod · Nprobe) rows, vectors included) that
-    * annIvfKmeans, the IVFADC pair, and ann_recall_report's scan count
-    * all derive. Their downstream column prunings differ, so Spark's
-    * ReuseExchange canonical-equality check can NOT dedupe the subtree
-    * across them — without this memo each consumer re-runs the
-    * query×centroid crossJoin + window. Production shape: a query batch
-    * is assigned to lists once, then probed against every index variant.
-    * Sweep paths (non-default nprobe, sampled codebook) bypass the memo.
-    */
-  private val kmProbesMemo = Memo.table()
-  private val kmScaledProbesMemo = Memo.table()
-
   /** Probe-side config fingerprint: unlike the LIST artifacts (whose
     * content the probe constants cannot touch), the probe tables' content
     * IS a function of Nprobe (rows kept per query) and QueryMod (which
@@ -817,8 +728,19 @@ object SimilarityQueries {
   private def probesConfigKey(c: Long): String =
     s"$ivfConfigKey Nprobe=$Nprobe QueryMod=$QueryMod C=$c"
 
+  /** The query→list probe table of the index whose inverted lists are
+    * `lists`. The DEFAULT-depth kmeans tables (O(n/QueryMod · Nprobe)
+    * rows, vectors included) are registry entries: annIvfKmeans, the
+    * IVFADC pair, and ann_recall_report's scan count all derive them, and
+    * their downstream column prunings differ, so Spark's ReuseExchange
+    * canonical-equality check can NOT dedupe the subtree across them —
+    * without the entry each consumer re-runs the query×centroid
+    * crossJoin + window. Production shape: a query batch is assigned to
+    * lists once, then probed against every index variant. Sweep paths
+    * (non-default nprobe, hash-sampled codebooks) build fresh.
+    */
   private def ivfProbes(spark: SparkSession, dir: String, cents: DataFrame,
-      nprobe: Int = Nprobe): DataFrame =
+      lists: String, nprobe: Int = Nprobe): DataFrame =
     // Round-18 (verdict item 1): the two SHARED probe tables are
     // disk-cached index artifacts like the lists/codebooks they pair with
     // (a query batch is assigned to lists ONCE, then probed against every
@@ -829,16 +751,14 @@ object SimilarityQueries {
     // window rebuild, and (b) replaces the rebuild subtree under the
     // InMemoryRelation with one parquet scan — fewer stages on the
     // first-touch pass of every session.
-    if (nprobe == Nprobe && kmCodebookMemo.get((spark, dir)).exists(_ eq cents))
-      Memo.memoizeDisk(kmProbesMemo, spark, dir, "ivf_probes_kmeans",
-        probesConfigKey(IvfC))(
+    if (nprobe == Nprobe && lists == "ivf_lists_kmeans")
+      Memo.disk(spark, dir, "ivf_probes_kmeans", probesConfigKey(IvfC))(() =>
         ivfProbesBuild(spark, dir, cents, nprobe))
-    else if (nprobe == Nprobe &&
-        kmScaledCodebookMemo.get((spark, dir)).exists(_ eq cents))
+    else if (nprobe == Nprobe && lists == "ivf_lists_kmeans_scaled")
       // the scaled Lloyd codebook's probe lists have the same three
       // default-depth consumers (search, ADC tables, recall-report scan)
-      Memo.memoizeDisk(kmScaledProbesMemo, spark, dir, "ivf_probes_kmeans_scaled",
-        probesConfigKey(scaledCOf(spark, dir)))(
+      Memo.disk(spark, dir, "ivf_probes_kmeans_scaled",
+        probesConfigKey(scaledCOf(spark, dir)))(() =>
         ivfProbesBuild(spark, dir, cents, nprobe))
     else ivfProbesBuild(spark, dir, cents, nprobe)
 
@@ -866,25 +786,27 @@ object SimilarityQueries {
     * construction.
     */
   private def ivfCandidates(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, nprobe: Int = Nprobe,
-      c: Int = IvfC): DataFrame =
-    ivfProbes(spark, dir, cents, nprobe).hint("shuffle_hash")
-      .join(ivfAssigned(spark, dir, cents, listsMemo, diskLabel, c), Seq("cidx"))
+      lists: String, nprobe: Int = Nprobe, c: Int = IvfC): DataFrame =
+    ivfProbes(spark, dir, cents, lists, nprobe).hint("shuffle_hash")
+      .join(ivfAssigned(spark, dir, cents, lists, c), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id"))
 
+  /** The IVF search stage, shared by [[annIvf]] and [[annIvfKmeans]]:
+    * assignment of all corpus vectors to their nearest centroid (packed
+    * max_by hash aggregate), Nprobe probe lists per query, shuffle-hash
+    * probe join, exact top-k ranking. `cents` must be a (cidx, cv2, cn2)
+    * codebook with cidx DENSE in [1, IvfC].
+    */
   private def ivfSearch(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, nprobe: Int = Nprobe,
-      c: Int = IvfC): DataFrame =
-    ranked(spark, dir,
-      ivfCandidates(spark, dir, cents, listsMemo, diskLabel, nprobe, c))
+      lists: String, nprobe: Int = Nprobe, c: Int = IvfC): DataFrame =
+    ranked(spark, dir, ivfCandidates(spark, dir, cents, lists, nprobe, c))
 
   /** Sweep hook (dev + property tests): [[annIvfKmeans]] at an arbitrary
     * probe depth, sharing every memoized index artifact.
     */
   private[graft] def annIvfKmeansProbe(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-      "ivf_lists_kmeans", nprobe)
+    ivfSearch(spark, dir, kmeansCodebook(spark, dir), "ivf_lists_kmeans", nprobe)
 
   /** The IVF search stage as oracle SQL — tc/assigned/probes/rank over a
     * codebook CTE named `$cent` with columns (cidx, cv, cn). Shared by the
@@ -936,7 +858,7 @@ object SimilarityQueries {
     * the JVM and DuckDB.
     *
     * Index-build cost is n·C = n^1.5 comparisons, one-time and
-    * disk-cached (Memo.memoizeDisk) like every index artifact — the
+    * disk-cached (Memo.disk) like every index artifact — the
     * production build-vs-probe split. At extreme scale a production
     * system escapes even that via a hierarchical coarse quantizer
     * (IMI / multi-level assignment); the codebook here stays hash-sampled
@@ -970,17 +892,14 @@ object SimilarityQueries {
     math.max(4L, math.min(ScaledCMax.toLong, c)).toInt
   }
 
-  private val scaledCodebookMemo = Memo.table()
-  private val scaledListsMemo = Memo.table()
-
   private def scaledCodebookOf(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(scaledCodebookMemo, spark, dir)(
+    Memo.persisted(spark, dir, "ivf_codebook_scaled")(() =>
       sampledCodebook(spark, dir, scaledC(estimatedRows(spark, dir))))
 
   def annIvfScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf_scaled")(
-      ivfSearch(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", c = scaledCOf(spark, dir)))
+    Memo.plan(spark, dir, "ann_ivf_scaled")(() =>
+      ivfSearch(spark, dir, scaledCodebookOf(spark, dir), "ivf_lists_scaled",
+        c = scaledCOf(spark, dir)))
 
   /** Sweep hooks (dev + RECALL.md): the scaled-capacity index at an
     * arbitrary probe depth, sharing every memoized artifact; and the
@@ -996,13 +915,13 @@ object SimilarityQueries {
     scaledCodebookOf(spark, dir)
 
   private[graft] def scaledIndexLists(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-      "ivf_lists_scaled", scaledCOf(spark, dir))
+    ivfAssigned(spark, dir, scaledCodebookOf(spark, dir), "ivf_lists_scaled",
+      scaledCOf(spark, dir))
 
   private[graft] def annIvfScaledProbe(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-      "ivf_lists_scaled", nprobe, scaledCOf(spark, dir))
+    ivfSearch(spark, dir, scaledCodebookOf(spark, dir), "ivf_lists_scaled",
+      nprobe, scaledCOf(spark, dir))
 
   /** The scaled-capacity codebook as CTEs (`cap`/`cent0`/`cent`) — shared
     * by the ann_ivf_scaled oracle and the hard_negatives_scaled oracle so
@@ -1060,8 +979,6 @@ object SimilarityQueries {
   val KmDim = 64
   val QScale = 1048576L // 2^20: |q_i| < 2^40-ish => 64-dim sums never overflow
 
-  private val kmCodebookMemo = Memo.table()
-
   /** (vec_id, v, nrm, qv) — emb plus the quantized integer vector. */
   private def quantized(e: DataFrame): DataFrame =
     e.withColumn("qv", transform(col("v"), x => floor(x * QScale + lit(0.5))))
@@ -1094,7 +1011,7 @@ object SimilarityQueries {
   }
 
   private def kmeansCodebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(kmCodebookMemo, spark, dir, "km_codebook", ivfConfigKey)(
+    Memo.disk(spark, dir, "km_codebook", ivfConfigKey)(() =>
       kmeansCodebookBuild(spark, dir, IvfC))
 
   /** The Lloyd build at an arbitrary list count — shared by the fixed
@@ -1122,9 +1039,8 @@ object SimilarityQueries {
   }
 
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf_kmeans")(
-      ivfSearch(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-        "ivf_lists_kmeans"))
+    Memo.plan(spark, dir, "ann_ivf_kmeans")(() =>
+      ivfSearch(spark, dir, kmeansCodebook(spark, dir), "ivf_lists_kmeans"))
 
   /** The two halves of the k-means IVF index, exposed for the STREAMING
     * probe job ([[graft.streaming.StreamingOps.annProbeStream]]): built
@@ -1136,8 +1052,7 @@ object SimilarityQueries {
   private[graft] def kmIndexCodebook(spark: SparkSession, dir: String): DataFrame =
     kmeansCodebook(spark, dir)
   private[graft] def kmIndexLists(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-      "ivf_lists_kmeans")
+    ivfAssigned(spark, dir, kmeansCodebook(spark, dir), "ivf_lists_kmeans")
 
   /** The Lloyd-codebook CTE chain (embCte, eq with (vec_id, v, nrm, qv),
     * init c0/cq/cent0, KmIters refinement steps → `${pfx}cent$KmIters`) as
@@ -1211,6 +1126,12 @@ object SimilarityQueries {
        |${ivfSearchSqlTail(s"cent$KmIters")}""".stripMargin
 
   // -------------------------------------------------- ann_ivf_kmeans_scaled
+  private def kmeansScaledCodebookOf(spark: SparkSession, dir: String): DataFrame = {
+    val c = scaledCOf(spark, dir)
+    Memo.disk(spark, dir, "km_codebook_scaled", s"$ivfConfigKey C=$c")(() =>
+      kmeansCodebookBuild(spark, dir, c))
+  }
+
   /** `ann_ivf_kmeans_scaled` — the balanced capacity law applied to the
     * LLOYD-REFINED quantizer: C = ⌊√(Nprobe·n)⌋ hash-sampled init
     * centroids (the [[annIvfScaled]] derivation, [[scaledCOf]] from exact
@@ -1233,25 +1154,16 @@ object SimilarityQueries {
     * SimilarityPropertySpec and audited (with scan fraction) in
     * [[annRecallReport]] and [[ivfBalance]].
     */
-  private val kmScaledCodebookMemo = Memo.table()
-  private val kmScaledListsMemo = Memo.table()
-
-  private def kmeansScaledCodebookOf(spark: SparkSession, dir: String): DataFrame = {
-    val c = scaledCOf(spark, dir)
-    Memo.memoizeDisk(kmScaledCodebookMemo, spark, dir, "km_codebook_scaled",
-      s"$ivfConfigKey C=$c")(kmeansCodebookBuild(spark, dir, c))
-  }
-
   def annIvfKmeansScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf_kmeans_scaled")(
-      ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-        "ivf_lists_kmeans_scaled", c = scaledCOf(spark, dir)))
+    Memo.plan(spark, dir, "ann_ivf_kmeans_scaled")(() =>
+      ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), "ivf_lists_kmeans_scaled",
+        c = scaledCOf(spark, dir)))
 
   /** Sweep hook: the scaled Lloyd index at arbitrary probe depth. */
   private[graft] def annIvfKmeansScaledProbe(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-      "ivf_lists_kmeans_scaled", nprobe, scaledCOf(spark, dir))
+    ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), "ivf_lists_kmeans_scaled",
+      nprobe, scaledCOf(spark, dir))
 
   val annIvfKmeansScaledSql: String =
     s"""WITH $kmScaledCentSqlCtes,
@@ -1365,9 +1277,6 @@ object SimilarityQueries {
   val PqMaxBroadcast: Int =
     math.max(1, MaxBroadcastQueries * KmDim / (PqM * PqK))
 
-  private val pqCodebookMemo = Memo.table()
-  private val pqCodesMemo = Memo.table()
-
   /** Lloyd iterations for the PQ sub-codebooks (the trained-quantizer
     * upgrade PQ gets, mirroring the IVF k-means codebook — a production
     * PQ always trains per-subspace centroids; the hash-sampled init alone
@@ -1391,7 +1300,7 @@ object SimilarityQueries {
     * is memoized index-BUILD cost.
     */
   private def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(pqCodebookMemo, spark, dir, "pq_codebook", pqConfigKey)(
+    Memo.disk(spark, dir, "pq_codebook", pqConfigKey)(() =>
       trainPqCodebook(quantized(emb(spark, dir)).select(col("vec_id"), col("qv"))))
 
   /** The PQ training loop over ANY (vec_id, qv) integer-vector source —
@@ -1490,7 +1399,7 @@ object SimilarityQueries {
 
   /** The PQ index: one row per corpus vector, codes = array of PqM codes. */
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(pqCodesMemo, spark, dir, "pq_codes", pqConfigKey)(
+    Memo.disk(spark, dir, "pq_codes", pqConfigKey)(() =>
       encodeCodes(pqDistances(quantized(emb(spark, dir)), pqCodebook(spark, dir))))
 
   /** Query-side ADC tables (query_id, tds): tds = the PqM×PqK distances
@@ -1536,7 +1445,7 @@ object SimilarityQueries {
     // plan-memo only at the declared operating point — the test hook
     // forcing multi-chunk paths must keep building fresh plans
     if (maxBroadcast == PqMaxBroadcast)
-      planMemo(spark, dir, "ann_pq")(annPqBuild(spark, dir, maxBroadcast))
+      Memo.plan(spark, dir, "ann_pq")(() => annPqBuild(spark, dir, maxBroadcast))
     else annPqBuild(spark, dir, maxBroadcast)
 
   private def annPqBuild(spark: SparkSession, dir: String,
@@ -1633,46 +1542,6 @@ object SimilarityQueries {
        |$pqSqlRank""".stripMargin
 
   // --------------------------------------------------------------- ann_ivfpq
-  /** `ann_ivfpq` — IVFADC with RESIDUAL encoding (Jégou et al. 2011,
-    * §III-IV — see reference survey row; "the residual vector r(y) =
-    * y − q_c(y) is encoded" is the defining step of IVFADC, not an
-    * optional refinement): IVF prunes WHICH candidates to score (each
-    * query reads only its Nprobe inverted lists, ~Nprobe/IvfC of the
-    * corpus); PQ compresses HOW each candidate is scored — but what gets
-    * PQ-encoded is the residual x − c(x) against the vector's assigned
-    * Lloyd-refined coarse centroid, NOT the raw vector. Residuals have a
-    * fraction of the raw vectors' variance (the coarse quantizer removed
-    * the rest), so the same PqM×PqK budget spends its quantization cells
-    * on a much smaller ball — the round-12 raw-code variant measured
-    * recall@10 0.365 against the 0.735 candidate ceiling, and residual
-    * encoding exists to close exactly that gap. The query side pays the
-    * standard IVFADC price: one PqM×PqK ADC table PER PROBED LIST (the
-    * query's residual differs per centroid), i.e. nq·Nprobe tables
-    * instead of nq — still O(1) per (query, list) and tiny next to the
-    * list scans they replace.
-    *
-    * Residual arithmetic stays engine-exact end to end: centroids are the
-    * integer-derived doubles of [[kmeansCodebook]], re-quantized to
-    * integers by one exactly-rounded floor(cv·2^20 + 0.5) per component
-    * ([[qCentroids]]), so residuals are differences of exact BIGINTs and
-    * every sub-distance/adist/rank below them is associative integer
-    * arithmetic the oracle reproduces bit-for-bit.
-    *
-    * Index shape at 100 TB is unchanged from the raw-code variant: the
-    * search path touches only (cidx, neighbor_id, codes) — 16-byte codes,
-    * 16× smaller than the vectors — via a shuffle-hash probe join on
-    * cidx (probe side grows with the corpus — never broadcast). The
-    * residual sub-codebooks are ONE shared PqM×PqK table (Jégou §III's
-    * memory-bounded choice), trained by the same [[trainPqCodebook]]
-    * loop as ann_pq's, just on residual vectors.
-    */
-  private val rpqCodebookMemo = Memo.table()
-  private val rIvfPqMemo = Memo.table()
-  private val residualsMemo = Memo.table()
-  private val rpqScaledCodebookMemo = Memo.table()
-  private val rIvfPqScaledMemo = Memo.table()
-  private val residualsScaledMemo = Memo.table()
-
   /** The IVFADC chain is ONE parameterized pipeline over two coarse
     * quantizers: `scaled = false` probes the fixed-capacity Lloyd
     * codebook ([[kmeansCodebook]], C = IvfC — the measured control half),
@@ -1687,15 +1556,14 @@ object SimilarityQueries {
 
   private def adcLists(spark: SparkSession, dir: String,
       scaled: Boolean): DataFrame =
-    if (scaled)
-      ivfAssigned(spark, dir, kmeansScaledCodebookOf(spark, dir),
-        kmScaledListsMemo, "ivf_lists_kmeans_scaled", scaledCOf(spark, dir))
-    else kmIndexLists(spark, dir)
+    ivfAssigned(spark, dir, adcCents(spark, dir, scaled), adcListsLabel(scaled),
+      if (scaled) scaledCOf(spark, dir) else IvfC)
 
   /** Artifact-label suffix + config key per variant: the scaled
     * artifacts' content depends on the derived C, so it rides the key.
     */
   private def adcSuffix(scaled: Boolean): String = if (scaled) "_scaled" else ""
+  private def adcListsLabel(scaled: Boolean): String = s"ivf_lists_kmeans${adcSuffix(scaled)}"
   private def adcConfigKey(spark: SparkSession, dir: String,
       scaled: Boolean): String =
     if (scaled) s"$ivfConfigKey $pqConfigKey C=${scaledCOf(spark, dir)}"
@@ -1717,7 +1585,7 @@ object SimilarityQueries {
     */
   private def residuals(spark: SparkSession, dir: String,
       scaled: Boolean = false): DataFrame =
-    Memo.memoize(if (scaled) residualsScaledMemo else residualsMemo, spark, dir) {
+    Memo.persisted(spark, dir, s"ivfpq_residuals${adcSuffix(scaled)}") { () =>
       adcLists(spark, dir, scaled).select(col("neighbor_id").as("vec_id"), col("cidx"))
         .join(quantized(emb(spark, dir)).select(col("vec_id"), col("qv")), Seq("vec_id"))
         .join(broadcast(qCentroids(spark, dir, scaled)), Seq("cidx"))
@@ -1730,9 +1598,8 @@ object SimilarityQueries {
     */
   private def rpqCodebook(spark: SparkSession, dir: String,
       scaled: Boolean = false): DataFrame =
-    Memo.memoizeDisk(if (scaled) rpqScaledCodebookMemo else rpqCodebookMemo,
-      spark, dir, s"rpq_codebook${adcSuffix(scaled)}",
-      adcConfigKey(spark, dir, scaled))(
+    Memo.disk(spark, dir, s"rpq_codebook${adcSuffix(scaled)}",
+      adcConfigKey(spark, dir, scaled))(() =>
       trainPqCodebook(residuals(spark, dir, scaled).select(col("vec_id"), col("qv"))))
 
   /** The IVFADC index: (cidx, neighbor_id, codes) with codes = the PqM
@@ -1741,8 +1608,8 @@ object SimilarityQueries {
     */
   private def ivfPqResIndex(spark: SparkSession, dir: String,
       scaled: Boolean = false): DataFrame =
-    Memo.memoizeDisk(if (scaled) rIvfPqScaledMemo else rIvfPqMemo, spark, dir,
-      s"ivfpq_res_index${adcSuffix(scaled)}", adcConfigKey(spark, dir, scaled)) {
+    Memo.disk(spark, dir, s"ivfpq_res_index${adcSuffix(scaled)}",
+      adcConfigKey(spark, dir, scaled)) { () =>
       val r = residuals(spark, dir, scaled)
       encodeCodes(pqDistances(r, rpqCodebook(spark, dir, scaled)))
         .withColumnRenamed("vec_id", "neighbor_id")
@@ -1755,21 +1622,18 @@ object SimilarityQueries {
     * residual sub-codebooks. (query_id, cidx, tds) with tds laid out
     * exactly like [[pqQueryTables]]' so [[pqRank]] scores both variants.
     */
-  /** Memo for the DEFAULT-depth ADC query distance tables — shared by
-    * [[annIvfPq]] (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the
+  /** The DEFAULT-depth ADC query distance tables are persisted — shared
+    * by [[annIvfPq]] (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the
     * two consumers differ only in how many candidates they keep, so the
     * per-(query, probed list) table build (residuals × sub-codebook
     * scoring + the 4096-slot sort) is identical and O(nq · Nprobe) rows.
-    * Without the memo each consumer — and the recall report, which runs
+    * Without the entry each consumer — and the recall report, which runs
     * both — rebuilds it. Sweep paths (non-default nprobe) bypass.
     */
-  private val rpqQtMemo = Memo.table()
-  private val rpqQtScaledMemo = Memo.table()
-
   private def rpqQueryTables(spark: SparkSession, dir: String,
       nprobe: Int, scaled: Boolean = false): DataFrame =
     if (nprobe == Nprobe)
-      Memo.memoize(if (scaled) rpqQtScaledMemo else rpqQtMemo, spark, dir)(
+      Memo.persisted(spark, dir, s"rpq_query_tables${adcSuffix(scaled)}")(() =>
         rpqQueryTablesBuild(spark, dir, nprobe, scaled))
     else rpqQueryTablesBuild(spark, dir, nprobe, scaled)
 
@@ -1777,7 +1641,8 @@ object SimilarityQueries {
       nprobe: Int, scaled: Boolean = false): DataFrame = {
     val qInt = quantized(emb(spark, dir)).filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("qv").as("qvi"))
-    val qres = ivfProbes(spark, dir, adcCents(spark, dir, scaled), nprobe)
+    val qres = ivfProbes(spark, dir, adcCents(spark, dir, scaled), adcListsLabel(scaled),
+      nprobe)
       .select(col("query_id"), col("cidx"))
       .join(qInt, Seq("query_id"))
       .join(broadcast(qCentroids(spark, dir, scaled)), Seq("cidx"))
@@ -1846,8 +1711,41 @@ object SimilarityQueries {
       .join(ivfPqResIndex(spark, dir, scaled).hint("shuffle_hash"), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id")), k)
 
+  /** `ann_ivfpq` — IVFADC with RESIDUAL encoding (Jégou et al. 2011,
+    * §III-IV — see reference survey row; "the residual vector r(y) =
+    * y − q_c(y) is encoded" is the defining step of IVFADC, not an
+    * optional refinement): IVF prunes WHICH candidates to score (each
+    * query reads only its Nprobe inverted lists, ~Nprobe/IvfC of the
+    * corpus); PQ compresses HOW each candidate is scored — but what gets
+    * PQ-encoded is the residual x − c(x) against the vector's assigned
+    * Lloyd-refined coarse centroid, NOT the raw vector. Residuals have a
+    * fraction of the raw vectors' variance (the coarse quantizer removed
+    * the rest), so the same PqM×PqK budget spends its quantization cells
+    * on a much smaller ball — the round-12 raw-code variant measured
+    * recall@10 0.365 against the 0.735 candidate ceiling, and residual
+    * encoding exists to close exactly that gap. The query side pays the
+    * standard IVFADC price: one PqM×PqK ADC table PER PROBED LIST (the
+    * query's residual differs per centroid), i.e. nq·Nprobe tables
+    * instead of nq — still O(1) per (query, list) and tiny next to the
+    * list scans they replace.
+    *
+    * Residual arithmetic stays engine-exact end to end: centroids are the
+    * integer-derived doubles of [[kmeansCodebook]], re-quantized to
+    * integers by one exactly-rounded floor(cv·2^20 + 0.5) per component
+    * ([[qCentroids]]), so residuals are differences of exact BIGINTs and
+    * every sub-distance/adist/rank below them is associative integer
+    * arithmetic the oracle reproduces bit-for-bit.
+    *
+    * Index shape at 100 TB is unchanged from the raw-code variant: the
+    * search path touches only (cidx, neighbor_id, codes) — 16-byte codes,
+    * 16× smaller than the vectors — via a shuffle-hash probe join on
+    * cidx (probe side grows with the corpus — never broadcast). The
+    * residual sub-codebooks are ONE shared PqM×PqK table (Jégou §III's
+    * memory-bounded choice), trained by the same [[trainPqCodebook]]
+    * loop as ann_pq's, just on residual vectors.
+    */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq")(ivfPqAdc(spark, dir, TopK))
+    Memo.plan(spark, dir, "ann_ivfpq")(() => ivfPqAdc(spark, dir, TopK))
 
   // ------------------------------------------------------- ann_ivfpq_scaled
   /** `ann_ivfpq_scaled` — IVFADC whose coarse quantizer follows the
@@ -1866,7 +1764,7 @@ object SimilarityQueries {
     * hash-checked end to end.
     */
   def annIvfPqScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_scaled")(ivfPqAdc(spark, dir, TopK, scaled = true))
+    Memo.plan(spark, dir, "ann_ivfpq_scaled")(() => ivfPqAdc(spark, dir, TopK, scaled = true))
 
   /** The residual probe/assign/encode/ADC CTE chain shared by the IVFADC
     * oracle and its re-rank twin — and, via `centChain`, by their
@@ -1941,7 +1839,7 @@ object SimilarityQueries {
   val RerankR = 100
 
   def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_rerank")(
+    Memo.plan(spark, dir, "ann_ivfpq_rerank")(() =>
       annIvfPqRerankProbe(spark, dir, Nprobe, RerankR))
 
   /** `ann_ivfpq_rerank_scaled` — the exact re-rank stage over the
@@ -1951,7 +1849,7 @@ object SimilarityQueries {
     * every fixed-capacity search path now has a measured C ∝ √n twin.
     */
   def annIvfPqRerankScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_rerank_scaled")(
+    Memo.plan(spark, dir, "ann_ivfpq_rerank_scaled")(() =>
       annIvfPqRerankProbe(spark, dir, Nprobe, RerankR, scaled = true))
 
   /** Sweep hook: the re-ranked IVFADC at arbitrary (nprobe, R). */
@@ -2328,18 +2226,17 @@ object SimilarityQueries {
     * has run); the report is three O(C)-row aggregations + a union.
     */
   def ivfBalance(spark: SparkSession, dir: String): DataFrame = {
-    def sizes(tag: String, cents: DataFrame, memo: Memo.Table,
-        diskLabel: String, c: Int = IvfC): DataFrame =
-      ivfAssigned(spark, dir, cents, memo, diskLabel, c)
+    def sizes(tag: String, cents: DataFrame, lists: String, c: Int = IvfC): DataFrame =
+      ivfAssigned(spark, dir, cents, lists, c)
         .groupBy(col("cidx")).agg(count(lit(1)).as("n_vectors"))
         .select(lit(tag).as("codebook"), col("cidx").cast("long").as("cidx"),
           col("n_vectors"))
-    val all = sizes("sampled", codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled")
-      .unionAll(sizes("lloyd", kmeansCodebook(spark, dir), kmListsMemo, "ivf_lists_kmeans"))
-      .unionAll(sizes("scaled", scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", scaledCOf(spark, dir)))
+    val all = sizes("sampled", codebook(spark, dir), "ivf_lists_sampled")
+      .unionAll(sizes("lloyd", kmeansCodebook(spark, dir), "ivf_lists_kmeans"))
+      .unionAll(sizes("scaled", scaledCodebookOf(spark, dir), "ivf_lists_scaled",
+        scaledCOf(spark, dir)))
       .unionAll(sizes("lloyd_scaled", kmeansScaledCodebookOf(spark, dir),
-        kmScaledListsMemo, "ivf_lists_kmeans_scaled", scaledCOf(spark, dir)))
+        "ivf_lists_kmeans_scaled", scaledCOf(spark, dir)))
     val totals = Window.partitionBy(col("codebook"))
     all.withColumn("share",
       col("n_vectors").cast("double") /
@@ -2423,7 +2320,7 @@ object SimilarityQueries {
     * nothing corpus-sized crosses the driver.
     */
   def annRecallReport(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_recall_report")(
+    Memo.plan(spark, dir, "ann_recall_report")(() =>
       annRecallReportOf(spark, dir, RecallAuditSampleTarget))
 
   /** Control-audit query budget: once the query set exceeds 2× this, the
@@ -2464,7 +2361,7 @@ object SimilarityQueries {
       * sampled-out query simply contributes no pairs.)
       */
     case class Regime(truth: DataFrame,
-        dec: DataFrame => DataFrame, memoTag: String)
+        dec: DataFrame => DataFrame, labelSuffix: String)
     val full = Regime(truthAll, identity, "")
     val ctl =
       if (!sampled) full
@@ -2473,18 +2370,17 @@ object SimilarityQueries {
     // Scan counts and scan fractions are PLANNING METADATA (round-17,
     // extending the round-16 kmNcand pattern to every member): each is a
     // deterministic 1-row aggregate over memoized index artifacts, pulled
-    // ONCE per (session, dir, regime) via Memo.memoizeValue and embedded
+    // ONCE per (session, dir, regime) as a Memo.value entry and embedded
     // in the report as a literal. The round-16 form kept them as live
     // sub-plans — three probes×list-sizes joins, the LSH candidate count,
     // two query-count aggregates, a corpus count, and TEN broadcast
     // attach joins — all re-executed (and AQE-replanned) inside every
     // report run to reproduce constants that cannot change within a
     // session. Warm report runs now carry zero scan-frac stages.
-    def ivfScanCount(r: Regime, cents: DataFrame, listsMemo: Memo.Table,
-        diskLabel: String, c: Int = IvfC): Long = {
-      val sizes = ivfAssigned(spark, dir, cents, listsMemo, diskLabel, c)
+    def ivfScanCount(r: Regime, cents: DataFrame, lists: String, c: Int = IvfC): Long = {
+      val sizes = ivfAssigned(spark, dir, cents, lists, c)
         .groupBy(col("cidx")).agg(count(lit(1)).as("sz"))
-      val raw = r.dec(ivfProbes(spark, dir, cents)).select(col("cidx"))
+      val raw = r.dec(ivfProbes(spark, dir, cents, lists)).select(col("cidx"))
         .join(broadcast(sizes), Seq("cidx"))
         .agg(sum(col("sz")).as("raw"))
         .select(col("raw")).head()
@@ -2494,7 +2390,7 @@ object SimilarityQueries {
       (if (raw.isNullAt(0)) 0L else raw.getLong(0)) - nQueriesVal(r)
     }
     def nQueriesVal(r: Regime): Long =
-      Memo.memoizeValue(nQueriesMemo, spark, dir + r.memoTag)(
+      Memo.value(spark, dir, s"recall_nq${r.labelSuffix}")(() =>
         r.truth.agg(count(lit(1)).as("nq")).head().getLong(0))
     // corpus size: the embeddings table's exact parquet-footer row count
     // (the same planning metadata the broadcast chunking uses)
@@ -2509,7 +2405,7 @@ object SimilarityQueries {
     // LSH scan count: in sampled mode build candidates for the DECIMATED
     // query set directly (the memoized full candidate table is exactly
     // the Θ(n²/101) mass sampling avoids — don't materialize it to count)
-    val lshNcand: Long = Memo.memoizeValue(lshScanCountMemo, spark, dir + ctl.memoTag) {
+    val lshNcand: Long = Memo.value(spark, dir, s"recall_scan_lsh${ctl.labelSuffix}") { () =>
       (if (sampled)
         lshCandidatesBuild(spark, dir, LshRadius, LshTables)
           .select(col("query_id"), col("neighbor_id")).filter(samplePred)
@@ -2519,18 +2415,18 @@ object SimilarityQueries {
     }
     // Three indexes (ivf_kmeans, ivfpq, ivfpq_rerank) share the SAME
     // kmeans probe lists, so their scan count is one number; ditto the
-    // scaled-Lloyd trio. The regime tag keys each memo so a sweep mixing
-    // sample targets in one session never crosses values.
-    val kmNcand: Long = Memo.memoizeValue(kmScanCountMemo, spark, dir + ctl.memoTag)(
-      ivfScanCount(ctl, kmeansCodebook(spark, dir), kmListsMemo, "ivf_lists_kmeans"))
-    val kmScaledNcand: Long = Memo.memoizeValue(kmScaledScanCountMemo, spark, dir)(
-      ivfScanCount(full, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-        "ivf_lists_kmeans_scaled", scaledCOf(spark, dir)))
-    val ivfNcand: Long = Memo.memoizeValue(ivfScanCountMemo, spark, dir + ctl.memoTag)(
-      ivfScanCount(ctl, codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled"))
-    val ivfScaledNcand: Long = Memo.memoizeValue(ivfScaledScanCountMemo, spark, dir)(
-      ivfScanCount(full, scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", scaledCOf(spark, dir)))
+    // scaled-Lloyd trio. The regime suffix keys each label so a sweep
+    // mixing sample targets in one session never crosses values.
+    val kmNcand: Long = Memo.value(spark, dir, s"recall_scan_km${ctl.labelSuffix}")(() =>
+      ivfScanCount(ctl, kmeansCodebook(spark, dir), "ivf_lists_kmeans"))
+    val kmScaledNcand: Long = Memo.value(spark, dir, "recall_scan_km_scaled")(() =>
+      ivfScanCount(full, kmeansScaledCodebookOf(spark, dir), "ivf_lists_kmeans_scaled",
+        scaledCOf(spark, dir)))
+    val ivfNcand: Long = Memo.value(spark, dir, s"recall_scan_ivf${ctl.labelSuffix}")(() =>
+      ivfScanCount(ctl, codebook(spark, dir), "ivf_lists_sampled"))
+    val ivfScaledNcand: Long = Memo.value(spark, dir, "recall_scan_ivf_scaled")(() =>
+      ivfScanCount(full, scaledCodebookOf(spark, dir), "ivf_lists_scaled",
+        scaledCOf(spark, dir)))
     val indexes: Seq[(String, DataFrame, Double, Regime)] = Seq(
       ("ann_lsh", annLsh(spark, dir), fracOf(ctl, lshNcand), ctl),
       ("ann_ivf", annIvf(spark, dir), fracOf(ctl, ivfNcand), ctl),

@@ -378,16 +378,14 @@ object TextQueries {
     */
   val TfidfK = 5
 
-  /** Memo for the per-doc term-frequency table (doc_id, term, tf) — the
-    * shared base of [[tfidfTopterms]] and [[repetitionScore]] (and the
-    * textbook first artifact of any term-statistics pipeline): one
-    * explode + hash aggregation over the corpus per (session, dir)
-    * instead of one per query invocation.
+  /** The per-doc term-frequency table (doc_id, term, tf) — the shared
+    * base of [[tfidfTopterms]] and [[repetitionScore]] (and the textbook
+    * first artifact of any term-statistics pipeline): one explode + hash
+    * aggregation over the corpus per (session, dir) instead of one per
+    * query invocation.
     */
-  private val tfMemo = Memo.table()
-
   private def termFreq(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(tfMemo, spark, dir, "term_freq", "tok=letter-runs")(
+    Memo.disk(spark, dir, "term_freq", "tok=letter-runs")(() =>
       words(spark, dir)
         .groupBy(col("doc_id"), col("word").as("term"))
         .agg(count(lit(1)).as("tf")))
@@ -836,11 +834,8 @@ object TextQueries {
     * partial-final hash agg per (session, dir), cached at vocabulary
     * scale (sublinear in the corpus, Heaps' law).
     */
-  private val sourceTermMemo = Memo.table()
-
   private def sourceTermFreq(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(sourceTermMemo, spark, dir, "source_term_freq",
-      "tok=letter-runs")(
+    Memo.disk(spark, dir, "source_term_freq", "tok=letter-runs")(() =>
       termFreq(spark, dir)
         .join(docs(spark, dir).select(col("doc_id"), col("source")), "doc_id")
         .groupBy(col("source"), col("term"))
@@ -1028,11 +1023,9 @@ object TextQueries {
     */
   val BpeRounds = 10
 
-  private val bpeTrainMemo = Memo.table()
-
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(bpeTrainMemo, spark, dir, "bpe_merges",
-      s"rounds=$BpeRounds")(bpeTrainMerges(bpeDictionary(spark, dir)))
+    Memo.disk(spark, dir, "bpe_merges", s"rounds=$BpeRounds")(() =>
+      bpeTrainMerges(bpeDictionary(spark, dir)))
 
   /** The (word, c) training dictionary — exposed for the rounds-cost
     * probe ([[graft.BpeCurve]]), which times [[bpeTrainMerges]] at 10×

@@ -934,7 +934,7 @@ object StreamingOps {
 
   /** Streaming form of `ann_ivf_kmeans` — real-time similarity retrieval:
     * a stream of query vectors probes the STATIC k-means IVF index that
-    * the batch build job wrote (served through `Memo.memoizeDisk`, so
+    * the batch build job wrote (`disk` entries of the `Memo` registry, so
     * this probe process — typically a different JVM than the builder —
     * reads the content-keyed parquet artifacts, never rebuilds). This is
     * the production serving split: index build is a batch job, retrieval

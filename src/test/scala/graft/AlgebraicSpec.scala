@@ -11,18 +11,36 @@ class AlgebraicSpec extends SparkTestBase {
 
   private val refMain = "/root/reference/src/main"
 
+  /** A small deterministic corpus in the reference's `pg-*.txt` layout:
+    * three files, repeated and mixed-case words, punctuation and digits
+    * (which the wc tokenizer splits on), and one word that occurs in a
+    * single file only.
+    */
+  private lazy val corpusGlob: String = {
+    val dir = Files.createTempDirectory("graft-algebraic")
+    val texts = Seq(
+      "The quick brown fox jumps over the lazy dog. The dog sleeps!",
+      "A fox, a FOX and another fox: 3 foxes ran 42 miles over the hill.",
+      "Lazy afternoons; the brown dog and the quick cat. Zebra.")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      Files.writeString(dir.resolve(s"pg-$i.txt"), (t + "\n") * (i + 2))
+    }
+    s"$dir/pg-*.txt"
+  }
+
   test("algebraic wordcount equals the generic mapGroups wordcount") {
-    assume(Files.exists(Paths.get(refMain)))
-    val glob = s"$refMain/pg-*.txt"
+    val glob = corpusGlob
     val generic = MapReduce.run(spark, glob, Apps.WordCount)
       .collect().map(kv => kv.key -> kv.value).toMap
     val algebraic = Algebraic.run(spark, glob, Algebraic.WordCountAlgebraic)
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(algebraic === generic)
+    assert(generic("fox") === "8") // once in 2 copies of pg-0, twice in 3 of pg-1
+    assert(generic("Zebra") === "4")
   }
 
   test("algebraic plan uses hash aggregation (partial agg), not mapGroups") {
-    val plan = Algebraic.run(spark, s"$refMain/pg-*.txt", Algebraic.WordCountAlgebraic)
+    val plan = Algebraic.run(spark, corpusGlob, Algebraic.WordCountAlgebraic)
       .queryExecution.executedPlan.toString
     assert(plan.contains("Aggregate"), plan.take(500))
     assert(!plan.contains("MapGroups"), plan.take(500))

@@ -2,18 +2,18 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
 /** Staleness semantics of the disk-backed artifact cache
-  * (`Memo.memoizeDisk`) — correctness-critical infrastructure: a stale
+  * (`Memo.disk`) — correctness-critical infrastructure: a stale
   * hit would silently serve a wrong index (wrong pair graph, wrong
   * codebook) to every downstream query, so each component of the content
-  * key is pinned here: a second process (simulated by a fresh in-memory
-  * memo table) must HIT, and any input-file or config change must MISS
-  * and rebuild.
+  * key is pinned here: a second process (simulated by a fresh session,
+  * which shares no registry entry with the first) must HIT, and any
+  * input-file or config change must MISS and rebuild.
   */
 class MemoDiskSpec extends SparkTestBase {
 
@@ -27,27 +27,27 @@ class MemoDiskSpec extends SparkTestBase {
   }
 
   /** One artifact build over `dir`, counting executions of the build
-    * thunk. The label is unique per test run so entries never collide
-    * with production artifacts sharing the cache root.
+    * thunk. The label must be a whitelisted disk label; the input dir is
+    * a fresh temp dir, so the content key never matches a production
+    * artifact sharing the cache root.
     */
-  private final class Builder(label: String, dir: String) {
+  private final class Builder(dir: String, label: String = "mad_model") {
     var builds = 0
-    def run(configKey: String = "k=1", memo: Memo.Table = Memo.table()): DataFrame =
-      Memo.memoizeDisk(memo, spark, dir, label, configKey) {
+    def run(configKey: String = "k=1",
+        session: SparkSession = spark.newSession()): DataFrame =
+      Memo.disk(session, dir, label, configKey) { () =>
         builds += 1
-        spark.read.parquet(s"$dir/t").groupBy((col("id") % 2).as("parity"))
+        session.read.parquet(s"$dir/t").groupBy((col("id") % 2).as("parity"))
           .agg(sum(col("v")).as("sv"))
       }
   }
 
-  private def uniq(tag: String) = s"test_${tag}_${System.nanoTime()}"
-
   test("second process hits the disk cache instead of rebuilding; rows identical") {
     val dir = inputDir("hit")
-    val b = new Builder(uniq("hit"), dir)
+    val b = new Builder(dir)
     val first = b.run().orderBy("parity").collect().map(_.toSeq)
     assert(b.builds === 1)
-    // fresh memo table = a cold JVM's view: must come back from disk
+    // fresh session = a cold JVM's view: must come back from disk
     val second = b.run().orderBy("parity").collect().map(_.toSeq)
     assert(b.builds === 1, "cold-process read must not re-run the build")
     assert(second.toSeq === first.toSeq)
@@ -55,7 +55,7 @@ class MemoDiskSpec extends SparkTestBase {
 
   test("changing an input file invalidates the footprint key and rebuilds") {
     val dir = inputDir("stale")
-    val b = new Builder(uniq("stale"), dir)
+    val b = new Builder(dir)
     b.run().count()
     assert(b.builds === 1)
     // regenerate the input (driver testdata refresh): same path, new bytes
@@ -68,7 +68,7 @@ class MemoDiskSpec extends SparkTestBase {
 
   test("changing a config constant invalidates only that key; old entry still hits") {
     val dir = inputDir("config")
-    val b = new Builder(uniq("config"), dir)
+    val b = new Builder(dir)
     b.run(configKey = "k=1").count()
     b.run(configKey = "k=2").count()
     assert(b.builds === 2, "a retuned constant must build a new artifact")
@@ -89,7 +89,7 @@ class MemoDiskSpec extends SparkTestBase {
       "CacheEpoch", "configKey", "footprint").foreach { kw =>
       assert(readme.contains(kw),
         s"README.md lost the disk-cache contract keyword '$kw' — " +
-          "keep the operator paragraph in sync with Memo.memoizeDisk")
+          "keep the operator paragraph in sync with Memo.disk")
     }
   }
 }
