@@ -95,8 +95,9 @@ object GenScale {
 
   /** Zipf(1)-ish word over a 200 k vocabulary (log-uniform index encoded
     * in base-26 LETTERS — the shingle tokenizer is letter-runs, so a
-    * digit-bearing encoding would collapse words; the same canary
-    * PrefixScale hit). Used by the open-vocabulary documents mode: the
+    * digit-bearing word like "w123" would collapse to the token "w" and
+    * give every document the same shingle set; caught when the first
+    * PrefixScale run reported J ≥ 0.5 for all C(n,2) pairs). Used by the open-vocabulary documents mode: the
     * regime where rare shingles STAY rare as the corpus grows — real
     * web-corpus behavior, vs the driver corpus's saturated 31-word
     * trigram universe.
@@ -240,11 +241,30 @@ object GenScale {
       round(lit(-50.0) * log(lit(1.0) - u(64, col("id"))), 2).as("value"),
       format_string("{\"k\": %d}", h(65, 100, col("id"))).as("props")), "events")
 
-    // documents: 10..100 words over the 31-word vocab. h71%500==0 rows
-    // (~0.2%) are EXACT copies of an earlier doc; h72%200==0 rows
-    // (~0.5%) are near-dups (the source text with ~2 words mutated).
+    writeDocuments(spark, out, nDocs, openVocabDocs)
+
+    // embeddings: 64 i.i.d. standard gaussians (Box-Muller over two
+    // hash-uniforms), L2-normalized, stored float[] like the source.
+    val dims = sequence(lit(0), lit(63))
+    val gauss = transform(dims, i =>
+      sqrt(lit(-2.0) * log(lit(1.0) - u(81, col("id"), i))) *
+        cos(lit(2.0 * math.Pi) * u(82, col("id"), i)))
+    val nrm = sqrt(aggregate(gauss, lit(0.0), (acc, x) => acc + x * x))
+    save(rng(nVecs).select(
+      col("id").as("vec_id"),
+      transform(gauss, x => (x / nrm).cast("float")).as("embedding"),
+      h(83, 10, col("id")).cast("int").as("label")), "embeddings")
+  }
+
+  /** The documents table: `nDocs` docs of 10..100 words over the 31-word
+    * vocabulary, or with `openVocab` the 200 k-word Zipf draw
+    * ([[zipfWord]]). h71%500==0 rows (~0.2%) are EXACT copies of an
+    * earlier doc; h72%200==0 rows (~0.5%) are near-dups (the source text
+    * with each word mutated at rate 1/25, ~2 words).
+    */
+  def writeDocuments(spark: SparkSession, out: String, nDocs: Long, openVocab: Boolean): Unit = {
     def drawWord(salt: Long, cols: Column*): Column =
-      if (openVocabDocs) zipfWord(salt, cols: _*)
+      if (openVocab) zipfWord(salt, cols: _*)
       else element_at(array(Vocab.map(lit): _*), (h(salt, 31, cols: _*) + 1).cast("int"))
     def words(seed: Column, mutSalt: Option[Long]): Column = {
       val wc = (h(73, 91, seed) + 10).cast("int")
@@ -261,23 +281,12 @@ object GenScale {
     val text = when(col("id") > 0 && h(71, 500, col("id")) === 0, words(srcId, None))
       .when(col("id") > 0 && h(72, 200, col("id")) === 0, words(srcId, Some(76)))
       .otherwise(words(col("id"), None))
-    save(rng(nDocs).select(
+    spark.range(0, nDocs, 1, spark.conf.get("spark.sql.shuffle.partitions").toInt).select(
       col("id").as("doc_id"),
       text.as("text"),
       when(u(77, col("id")) < 0.41, "en").otherwise(pick(78, Langs.tail, col("id"))).as("lang"),
       concat(lit("src"), h(79, 20, col("id"))).as("source"),
-      length(text).cast("long").as("n_chars")), "documents")
-
-    // embeddings: 64 i.i.d. standard gaussians (Box-Muller over two
-    // hash-uniforms), L2-normalized, stored float[] like the source.
-    val dims = sequence(lit(0), lit(63))
-    val gauss = transform(dims, i =>
-      sqrt(lit(-2.0) * log(lit(1.0) - u(81, col("id"), i))) *
-        cos(lit(2.0 * math.Pi) * u(82, col("id"), i)))
-    val nrm = sqrt(aggregate(gauss, lit(0.0), (acc, x) => acc + x * x))
-    save(rng(nVecs).select(
-      col("id").as("vec_id"),
-      transform(gauss, x => (x / nrm).cast("float")).as("embedding"),
-      h(83, 10, col("id")).cast("int").as("label")), "embeddings")
+      length(text).cast("long").as("n_chars"))
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
   }
 }

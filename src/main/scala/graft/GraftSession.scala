@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Single source of truth for the session configuration the engine
   * REQUIRES to run correctly and to survive its measured scale-ups.
   *
-  * Every graft entry point (Bench, Verify, Explain, the profiling tools,
-  * the CLI, the test base) builds its session through [[configure]];
+  * Every graft entry point (Bench, Verify, Profile and the other dev
+  * tools, the CLI, the test base) builds its session through [[configure]];
   * an EMBEDDER with an existing session calls `GraftSession(spark)` once
   * before invoking anything in `SparkEntry.queries` — it applies the
   * runtime-settable subset and diagnoses any static (JVM-wide) conf that

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Open-vocabulary scaling probe for the ngram_jaccard_prefix PREFIX
   * branch (dev tool; evidence consumer: BASELINE.md's 10× scale-up
   * section). The driver corpus saturates its trigram universe, so the
@@ -17,55 +14,14 @@ import org.apache.spark.sql.functions._
   * count-plan ratio worse (its fan-out follows the boilerplate head),
   * and the routing decision = prefix at both scales.
   *
-  * Same generation discipline as [[GenScale]]: spark.range + pure
-  * hash-of-id column expressions, no driver rows, no RNG state. ~0.5%
-  * near-dup mutations + ~0.2% exact copies of earlier docs keep the
-  * J ≥ τ output nonempty so the verify stage does real work.
+  * The corpus is GenScale's open-vocabulary documents table
+  * ([[GenScale.writeDocuments]]): its ~0.5% near-dup mutations and ~0.2%
+  * exact copies of earlier docs keep the J ≥ τ output nonempty so the
+  * verify stage does real work.
   *
   *   sbt "runMain graft.PrefixScale [nDocsSmall nDocsLarge]"
   */
 object PrefixScale {
-  private def u(salt: Long, cols: org.apache.spark.sql.Column*) =
-    shiftrightunsigned(xxhash64((lit(salt) +: cols): _*), 11).cast("double") /
-      lit((1L << 53).toDouble)
-  private def h(salt: Long, m: Long, cols: org.apache.spark.sql.Column*) =
-    pmod(xxhash64((lit(salt) +: cols): _*), lit(m))
-
-  /** Zipf(1)-ish word over a 200k vocabulary: log-uniform index, encoded
-    * in base-26 LETTERS (the engine's shingle tokenizer is letter-runs —
-    * a digit-bearing word like "w123" would collapse to the token "w" and
-    * degenerate every document to the same shingle set; caught when the
-    * first probe run reported J ≥ 0.5 for all C(n,2) pairs).
-    */
-  private val V = 200000.0
-  private def zipfWord(salt: Long, cols: org.apache.spark.sql.Column*) =
-    translate(
-      conv(floor(pow(lit(V), u(salt, cols: _*))).cast("long").cast("string"),
-        10, 26),
-      "0123456789ABCDEFGHIJKLMNOP", "abcdefghijklmnopqrstuvwxyz")
-
-  private def gen(spark: SparkSession, out: String, nDocs: Long): Unit = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def words(seed: org.apache.spark.sql.Column, mut: Option[Long]) = {
-      val wc = (h(3, 91, seed) + 10).cast("int")
-      val base = transform(sequence(lit(1), wc), i => zipfWord(4, seed, i))
-      mut match {
-        case None => array_join(base, " ")
-        case Some(s) => array_join(transform(base, (w, i) =>
-          when(h(s, 25, seed, i) === 0, zipfWord(s + 1, seed, i)).otherwise(w)), " ")
-      }
-    }
-    val srcId = greatest(lit(0L), col("id") - 1L - h(5, 50, col("id")))
-    val text = when(col("id") > 0 && h(1, 500, col("id")) === 0, words(srcId, None))
-      .when(col("id") > 0 && h(2, 200, col("id")) === 0, words(srcId, Some(6)))
-      .otherwise(words(col("id"), None))
-    spark.range(0, nDocs, 1, parts).select(
-      col("id").as("doc_id"), text.as("text"),
-      lit("en").as("lang"), lit("synth").as("source"),
-      length(text).cast("long").as("n_chars"))
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-  }
-
   def main(args: Array[String]): Unit = {
     val sizes = if (args.length >= 2) Seq(args(0).toLong, args(1).toLong)
       else Seq(5000L, 50000L)
@@ -76,7 +32,7 @@ object PrefixScale {
     val root = java.nio.file.Files.createTempDirectory("prefix-scale")
     for (n <- sizes) {
       val dir = s"$root/docs$n"
-      gen(spark, dir, n)
+      GenScale.writeDocuments(spark, dir, n, openVocab = true)
       val routesToCount = graft.queries.DedupQueries.prefixRouteUseCount(spark, dir)
       def time(forceCount: Option[Boolean]): (Double, Long) = {
         val t0 = System.nanoTime()

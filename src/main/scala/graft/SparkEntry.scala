@@ -16,13 +16,16 @@ import graft.queries._
   */
 object SparkEntry {
 
-  val all: ListMap[String, QueryDef] = ListMap(
-    (TextQueries.entries ++
-      RelationalQueries.entries ++
-      DedupQueries.entries ++
-      SimilarityQueries.entries ++
-      MultimodalQueries.entries ++
-      PipelineQueries.entries): _*)
+  /** The query families, in inventory order, with their entries. */
+  val families: Seq[(String, Seq[(String, QueryDef)])] = Seq(
+    "text" -> TextQueries.entries,
+    "relational" -> RelationalQueries.entries,
+    "dedup" -> DedupQueries.entries,
+    "similarity" -> SimilarityQueries.entries,
+    "multimodal" -> MultimodalQueries.entries,
+    "pipeline" -> PipelineQueries.entries)
+
+  val all: ListMap[String, QueryDef] = ListMap(families.flatMap(_._2): _*)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -12,8 +16,9 @@ import graft.streaming.StreamingOps
   *
   * Method: each twin runs once, alone, over the full input directory as a
   * one-trigger AvailableNow file stream into a counting foreachBatch sink
-  * (no rows buffered on the driver), with a fresh temp checkpoint. Wall
-  * is measured start → processAllAvailable; rows/s = source rows / wall.
+  * (no rows buffered on the driver), with a fresh temp checkpoint that
+  * is deleted once the twin stops. Wall is measured start →
+  * processAllAvailable; rows/s = source rows / wall.
   * This measures the closed-input batch-equivalent cost of each twin's
   * plan (state-store writes included), NOT steady-state latency — the
   * stateful twins' restart/eviction behavior is StreamSoak's job.
@@ -81,22 +86,26 @@ object StreamMicroBench {
       ("manifest", "complete", nDocs, () => StreamingOps.manifestStream(docs)))
 
     val results = twins.map { case (nm, mode, nIn, mk) =>
-      val ckpt = java.nio.file.Files.createTempDirectory(s"smb-$nm").toString
-      var rowsOut = 0L
+      val ckpt = Files.createTempDirectory(s"smb-$nm")
+      // written by the stream execution thread, read here
+      val rowsOut = new AtomicLong
       spark.sparkContext.setJobDescription(s"stream-micro: $nm")
       val t0 = System.nanoTime()
       val q = mk().writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) => rowsOut += b.count(): Unit }
+            _: Long) => rowsOut.addAndGet(b.count()): Unit }
         .outputMode(mode)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.processAllAvailable(); q.stop()
+      try q.processAllAvailable() finally q.stop()
       val sec = (System.nanoTime() - t0) / 1e9
+      val w = Files.walk(ckpt)
+      try w.sorted(Comparator.reverseOrder[Path]()).forEach(p => { Files.deleteIfExists(p); () })
+      finally w.close()
       val rps = nIn / sec
       println(f"""{"twin": "$nm", "mode": "$mode", "rows_in": $nIn, """ +
-        f""""rows_out": $rowsOut, "sec": $sec%.3f, "rows_per_sec": $rps%.0f}""")
+        f""""rows_out": ${rowsOut.get}, "sec": $sec%.3f, "rows_per_sec": $rps%.0f}""")
       (nm, sec, rps)
     }
     val total = results.map(_._2).sum

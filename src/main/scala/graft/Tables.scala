@@ -24,7 +24,7 @@ object Tables {
     * guide §6 "file listing"): every `spark.read.parquet` call pays a
     * driver-side file listing + footer schema read + InMemoryFileIndex
     * build, measured 0.1-0.45 s of pure DataFrame-construction time per
-    * query at sf0.1 (PhaseProfile), and some queries (dq_audit) load six
+    * query at sf0.1 (Profile `build_s`), and some queries (dq_audit) load six
     * tables. The logical plan of a base table is identical across every
     * query in a session, so it is built once per (session, dir, table) and
     * each query grafts its own transforms on top. This caches metadata

@@ -138,8 +138,8 @@ object TextQueries {
     * (`sum(tf)` per term — a vocab-collapse over the cached artifact, so
     * the plan's three unigram references each read the InMemoryTableScan,
     * not the parquet corpus; without the memo the planner re-tokenized the
-    * corpus once PER REFERENCE — 4 scans, observed in Explain). Everything
-    * after runs on vocab-sized tables: the two count-attach joins are
+    * corpus once PER REFERENCE — 4 scans, observed with `Profile plan`).
+    * Everything after runs on vocab-sized tables: the two count-attach joins are
     * vocab⋈vocab keyed joins with NO broadcast hint — the vocabulary
     * grows with Heaps' law (~n^0.5), so at 100 TB an open-vocab unigram
     * table is tens of GB and a forced `broadcast()` would bypass AQE's
@@ -1538,7 +1538,7 @@ object TextQueries {
     // aggregation and once in a final left join that re-attached jaccard
     // and zero-filled no-common-term pairs — and the pair pipeline's
     // shingle-intersection compute is all broadcast-hash-join probe work
-    // (no Exchange), which ReuseExchange cannot dedupe: StageProfile
+    // (no Exchange), which ReuseExchange cannot dedupe: per-stage profiling
     // measured the TWO pair evaluations at 12.6 s + 9.5 s of executor CPU
     // per warm run at sf0.1 (the whole query's output is 25 rows).
     // Threading jaccard through the dot aggregation and making the

@@ -134,16 +134,11 @@ object StreamingOps {
     * ages out — the unbounded global `groupBy(word)` form would hold one
     * state row per distinct word forever. Per-window counts sum to the
     * batch wordcount over the same closed input (exactly equal when the
-    * input lands in one window, the StreamingSpec construction).
+    * input lands in one window, the StreamingSpec construction). It is
+    * [[windowWordCounts]] without the window key.
     */
   def wordCounts(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
-      .withColumn("ingest_ts", current_timestamp())
-      .withWatermark("ingest_ts", DedupHorizon)
-      .groupBy(window(col("ingest_ts"), "1 minute"), col("word"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("word"), col("cnt"))
+    windowWordCounts(docs).select(col("word"), col("cnt"))
 
   /** Streaming top-k words — the continuous form of the reference's Q7
     * `top_k` (top 20 of wordcount, the last reference-derived query
@@ -153,8 +148,7 @@ object StreamingOps {
     * top-k splits in two:
     *
     *   (a) [[windowWordCounts]] — the stateful part: per-ingest-window
-    *       word counts, watermark-bounded exactly like [[wordCounts]]
-    *       but keeping the window key; and
+    *       word counts under the watermark, keyed by window; and
     *   (b) [[topWords]] — the per-trigger rank-and-limit over the
     *       CURRENT count table, applied in `foreachBatch` (or on the
     *       complete-mode memory table): its input is |distinct words per

@@ -76,7 +76,7 @@ class GraftSessionSpec extends SparkTestBase {
 
   test("the engine's own entry-point builder carries every required conf") {
     // SparkTestBase builds through GraftSession.configure — the same path
-    // as Bench/Verify/Explain/the profiling tools; assert the session
+    // as Bench/Verify/Profile/the other dev tools; assert the session
     // actually running this inventory has every required value
     (GraftSession.runtimeConfs ++ GraftSession.staticConfs).foreach {
       case (k, v) => assert(spark.conf.get(k) === v, s"conf $k")
